@@ -234,16 +234,11 @@ TABLES: dict[str, TableSpec] = {
     ]
 }
 
-SOURCE_FILES = [s.source_file for s in TABLES.values()]
-
 # Audit columns added at bronze (reference P1/P2,
 # mm_source_to_bronze.py:148-153) — constants except updated_by/on
 # which the ingest call provides.
 AUDIT_REGION = "NAM"
 AUDIT_COUNTRY = "USA"
-
-# The two parallel datasets (config.py:105-109).
-DATASETS = ("mm", "linehaul")
 
 
 def assert_no_conflicting_renames() -> None:

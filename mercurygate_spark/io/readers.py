@@ -1,10 +1,10 @@
-"""Sources (SURVEY.md §2a S6-S8).
+"""Sources (SURVEY.md §2a S6-S7).
 
 The reference reads CSV with header+inference three times per file
 (anti-pattern §2d-1: inference pass, count() pass, write pass). This
 reader scans once: inference is optional (explicit schema preferred,
-§7 risk 'CSV inferSchema'), and callers count AFTER the bronze write
-from the written files, not the CSV.
+§7 risk 'CSV inferSchema'), and the bronze ingest counts the rows as
+it writes them, not with a second CSV pass.
 """
 
 from __future__ import annotations
@@ -35,7 +35,3 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     mm_bronze_silver.py:204)."""
     return spark.read.parquet(path)
 
-
-def from_rows(spark: SparkSession, rows: list[dict], schema: str | None = None) -> DataFrame:
-    """Local-collection source (reference S8, mm_source_to_bronze.py:208)."""
-    return spark.createDataFrame(rows, schema=schema) if schema else spark.createDataFrame(rows)

@@ -5,8 +5,8 @@ zero-row guard → hive-partitioned parquet under
 ``{base}/{table}/datePart={Historic|YYYY-MM-DD}/year_month=…``
 (mm_source_to_bronze.py:119-167), with the §2d anti-patterns fixed:
 
-- ONE scan (no inference+count+write triple read): counts come from
-  the returned DataFrame post-write;
+- ONE scan (no inference+count+write triple read): the row count is
+  observed on the frame as it is written, not re-read;
 - first-load routing is an explicit ``mode`` parameter, not a
   filesystem probe (§7 risk 'First-load-to-Historic routing');
 - audit timestamp is a caller-supplied value, not a hidden
@@ -18,7 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mercurygate_spark.catalog import AUDIT_COUNTRY, AUDIT_REGION, TableSpec
@@ -79,14 +79,18 @@ def ingest_table(
 ) -> BronzeResult:
     """CSV extract → enriched, partitioned bronze parquet.
 
-    Returns the post-write row count (counted from the written files —
-    one upstream CSV scan total, vs the reference's three)."""
+    Returns the written row count, observed on the frame during the
+    write (an ``Observation`` metric) — one upstream CSV scan total,
+    vs the reference's three, and no listing or re-read of the
+    written partitions."""
     raw = read_csv(spark, csv_path, infer=infer)
     if raw.isEmpty():  # cheap limit-1 probe, not a full count (fixes §2d-1)
         raise ZeroRowError(f"{spec.name}: extract produced 0 rows")
-    enriched = enrich_audit(raw, database, updated_by, updated_on)
+    rows = Observation()
+    enriched = enrich_audit(raw, database, updated_by, updated_on).observe(
+        rows, F.count(F.lit(1)).alias("count")
+    )
     dp = "Historic" if mode == "initial" else (date_part or updated_on.strftime("%Y-%m-%d"))
     path = bronze_path(base, spec.name, dp)
     write_parquet_partitioned(enriched, path, partition_by=["year_month"])
-    count = spark.read.parquet(path).count()
-    return BronzeResult(table=spec.name, database=database, count=count, path=path)
+    return BronzeResult(table=spec.name, database=database, count=rows.get["count"], path=path)

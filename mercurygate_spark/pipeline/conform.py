@@ -71,6 +71,14 @@ def add_soft_delete_flag(df: DataFrame, value: str = "Y") -> DataFrame:
     return df.withColumn("active", F.lit(value))
 
 
+def row_md5(df: DataFrame) -> Column:
+    """md5 over every column of ``df`` — the final tiebreak of
+    ``dedupe_latest``. Evaluate it on the frame whose rows are being
+    ranked: computed after a union, it would also cover the union's
+    bookkeeping and null-filled columns and pick different winners."""
+    return F.md5(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
+
+
 def dedupe_latest(
     df: DataFrame, primary_key: list[str], order_by: list[str], tiebreakers: list[str] | None = None
 ) -> DataFrame:
@@ -94,9 +102,7 @@ def dedupe_latest(
     for tb in tiebreakers or []:
         order_cols.append(F.col(tb).desc_nulls_last())
     if not tiebreakers:
-        order_cols.append(
-            F.md5(F.to_json(F.struct(*[F.col(c) for c in df.columns]))).desc()
-        )
+        order_cols.append(row_md5(df).desc())
     w = Window.partitionBy(*primary_key).orderBy(*order_cols)
     return (
         df.withColumn("__rn", F.row_number().over(w))

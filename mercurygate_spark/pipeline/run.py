@@ -14,6 +14,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 
 from mercurygate_spark.catalog import TABLES, TableSpec, derive_table_name
+from mercurygate_spark.io.fs import path_exists
 from mercurygate_spark.pipeline.bronze import BronzeResult, ZeroRowError, ingest_table
 from mercurygate_spark.pipeline.ledger import RunLedger
 from mercurygate_spark.pipeline.silver import conform, merge_upsert_scd, publish_snapshot
@@ -67,9 +68,7 @@ def run_silver(
     out: dict[str, DataFrame] = {}
     for spec in tables or TABLES.values():
         src = f"{bronze_base}/{spec.name}"
-        import os
-
-        if not os.path.exists(src):
+        if not path_exists(spark, src):  # scheme-aware: os.path is False on URIs
             continue
         with ledger.timed(spec.name, database) as entry:
             bronze_df = spark.read.parquet(src)  # reads across datePart=* (reference S7)

@@ -12,14 +12,15 @@ columns, flag active='Y', overwrite Delta (mm_bronze_silver.py:
   inserted, vanished keys kept with active='N' (the reference writes
   active='Y' forever and never flips it — mm_bronze_silver.py:222).
 
-Merge is implemented Delta-free as anti-join + union + overwrite
-(Delta MERGE INTO when the classpath has it — io.writers probes).
-At scale both sides shuffle once on the pk; AQE handles skew.
+Merge is implemented Delta-free as union + one pk-ranked window +
+overwrite (Delta format when the classpath has it — io.writers
+probes). At scale the union shuffles once on the pk; AQE handles
+skew.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mercurygate_spark.catalog import TableSpec
@@ -31,6 +32,7 @@ from mercurygate_spark.pipeline.conform import (
     add_soft_delete_flag,
     dedupe_latest,
     rename_conform,
+    row_md5,
     type_timestamps,
 )
 
@@ -75,6 +77,45 @@ def _staged_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
     spark.catalog.refreshByPath(staging)
 
 
+def _merge_frame(
+    existing: DataFrame,
+    incoming: DataFrame,
+    spec: TableSpec,
+    soft_delete_missing: bool,
+) -> DataFrame:
+    """The new current table for ``merge_upsert_scd``, as one pass over
+    ``existing ∪ incoming`` with a single pk shuffle.
+
+    Each pk's rows are ranked by ``order_by`` DESC, then source
+    (incoming beats existing on an exact ``order_by`` tie), then the
+    md5 of the incoming row's own columns — among incoming rows the
+    order ``dedupe_latest`` uses, so the winner is the newer of the
+    existing row and ``dedupe_latest(incoming)``. Presence in the
+    extract is ``max(__src)`` over the same window, so the soft-delete
+    flag needs no key join. Both window columns share one partitioning
+    and one sort: one Exchange, one Window."""
+    pk = spec.primary_key
+    rows = existing.withColumn("__src", F.lit(0)).unionByName(
+        incoming.withColumns({"__h": row_md5(incoming), "__src": F.lit(1)}),
+        allowMissingColumns=True,
+    )
+    w = Window.partitionBy(*pk).orderBy(
+        *[F.col(c).desc_nulls_last() for c in spec.order_by],
+        F.col("__src").desc(),
+        F.col("__h").desc_nulls_last(),
+    )
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = rows.withColumns(
+        {"__rn": F.row_number().over(w), "__present": F.max("__src").over(whole)}
+    ).where(F.col("__rn") == 1)
+    if soft_delete_missing:
+        ranked = ranked.withColumn(
+            "active",
+            F.when(F.col("__present") == 0, F.lit("N")).otherwise(F.col("active")),
+        )
+    return ranked.drop("__src", "__h", "__rn", "__present")
+
+
 def merge_upsert_scd(
     spark: SparkSession,
     incoming: DataFrame,
@@ -90,10 +131,11 @@ def merge_upsert_scd(
     extracts — absence just means unchanged) they keep their flag.
     Returns the new current table (also written).
 
-    Plan: union(existing, dedupe(incoming)) → latest-per-pk dedupe
-    (order_by decides between existing and incoming — a late-arriving
-    OLDER row can never regress the table; incoming wins exact ties) →
-    soft-delete flagging. One shuffle per side; no driver-side state.
+    Plan (``_merge_frame``): one pk-ranked pass over existing ∪
+    incoming — order_by decides between existing and incoming (a
+    late-arriving OLDER row can never regress the table; incoming wins
+    exact ties) — with presence taken from the same window. One
+    shuffle on the pk; no rows are collected to Python.
 
     Path probes and staging cleanup go through the Hadoop FileSystem
     API (io.fs) so the first-load/refresh routing works on s3a://,
@@ -101,25 +143,12 @@ def merge_upsert_scd(
     reference's os.path.exists bug, SURVEY.md §2d-3)."""
     from mercurygate_spark.io.fs import path_exists
 
-    incoming_latest = dedupe_latest(incoming, spec.primary_key, spec.order_by)
     if not path_exists(spark, path):
+        incoming_latest = dedupe_latest(incoming, spec.primary_key, spec.order_by)
         write_delta_or_parquet(incoming_latest, path, mode="overwrite")
         return incoming_latest
     existing = read_delta_or_parquet(spark, path)
-    all_rows = existing.withColumn("__src", F.lit(0)).unionByName(
-        incoming_latest.withColumn("__src", F.lit(1)), allowMissingColumns=True
-    )
-    current = dedupe_latest(
-        all_rows, spec.primary_key, spec.order_by, tiebreakers=["__src"]
-    ).drop("__src")
-    if soft_delete_missing:
-        incoming_keys = incoming_latest.select(spec.primary_key).distinct()
-        current = current.join(
-            incoming_keys.withColumn("__present", F.lit(1)), spec.primary_key, "left"
-        ).withColumn(
-            "active", F.when(F.col("__present").isNull(), F.lit("N")).otherwise(F.col("active"))
-        ).drop("__present")
-    _staged_swap(spark, current, path)
+    _staged_swap(spark, _merge_frame(existing, incoming, spec, soft_delete_missing), path)
     return read_delta_or_parquet(spark, path)
 
 

@@ -17,6 +17,11 @@ Key choices (and why they survive a 100 TB / 1000-executor scale-up):
 - ``spark.sql.shuffle.partitions`` defaults to ~cores locally; on a
   real cluster AQE coalesces from a high initial number, so we only
   set the initial value when running local.
+- ``spark.sql.sources.parallelPartitionDiscovery.parallelism`` = the
+  core count: past 32 partition directories Spark lists them in a
+  Spark job with, by default, one task per directory (up to 10000) —
+  ~80 tiny tasks for each bronze ``datePart`` a silver read lists.
+  Sized to the cores the listing is one wave of tasks.
 - Arrow enabled — every pandas UDF / mapInPandas crossing is
   Arrow-batched, never row-at-a-time pickle.
 """
@@ -41,6 +46,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -65,7 +71,9 @@ def get_spark(
 def tune_existing(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable conf to a session we did not
     create (the driver hands us one in ``__spark_entry__.entry``)."""
+    cores = str(spark.sparkContext.defaultParallelism)
     for k, v in {
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism": cores,
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",

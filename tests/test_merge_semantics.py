@@ -186,6 +186,39 @@ def test_merge_randomized_against_model(spark, tmp_path):
         assert _table(out) == expected, f"trial {trial} (soft_delete={sdm})"
 
 
+def test_merge_intra_batch_tie_and_losing_incoming_keeps_flag(spark, tmp_path):
+    """Ties the model above leaves open. An incoming batch with two
+    rows of one pk at the SAME order_by and different payloads must
+    keep the row dedupe_latest keeps over that batch alone (its md5
+    tiebreak covers the incoming row's own columns, not the merge's
+    bookkeeping). A key whose incoming row loses to a newer silver row
+    is still present in the extract, so with soft_delete_missing it
+    keeps the silver row's flag — 'N' stays 'N', 'Y' stays 'Y'."""
+    from mercurygate_spark.pipeline.conform import dedupe_latest
+
+    path = str(tmp_path / "tie")
+    _seed(spark, path, [
+        (1, 1, "t1", "Y"),  # loses to the tied incoming pair below
+        (2, 9, "t2", "N"),  # newer than its incoming row, flagged N
+        (3, 9, "t3", "Y"),  # newer than its incoming row, flagged Y
+    ])
+    incoming = [
+        (1, 5, "tie-a", "Y"),
+        (1, 5, "tie-b", "Y"),
+        (1, 5, "tie-c", "Y"),
+        (2, 4, "s2", "Y"),
+        (3, 4, "s3", "Y"),
+    ]
+    want = _table(dedupe_latest(_df(spark, incoming), SPEC.primary_key, SPEC.order_by))[1]
+    out = _table(merge_upsert_scd(spark, _df(spark, incoming), SPEC, path))
+    assert out[1] == want
+    assert out[2] == (2, 9, "t2", "N")
+    assert out[3] == (3, 9, "t3", "Y")
+    # and the intra-batch pick is the same on the first-load branch
+    first = _table(merge_upsert_scd(spark, _df(spark, incoming), SPEC, str(tmp_path / "tie0")))
+    assert first[1] == want
+
+
 # ---------------------------------------------------------------------------
 # SCD2 (merge_upsert_scd2): full-history contract
 # ---------------------------------------------------------------------------

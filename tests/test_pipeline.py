@@ -120,6 +120,59 @@ def test_zero_row_guard(spark, tmp_path):
         )
 
 
+def _monthly_claims_csv(path, months: int, per_month: int) -> int:
+    """A claim extract spread over ``months`` distinct months — past
+    Spark's 32-directory threshold for a parallel listing job."""
+    lines = ["claimid,claimnumber,statuscode,totalamount,datecreated"]
+    for m in range(months):
+        for i in range(per_month):
+            n = m * per_month + i
+            lines.append(f"{n},CLM-{n:05d},OPEN,{n}.25,{2020 + m // 12}-{m % 12 + 1:02d}-03 10:00:00")
+    path.write_text("\n".join(lines) + "\n")
+    return months * per_month
+
+
+def test_bronze_count_comes_from_the_write(spark, tmp_path):
+    """BronzeResult.count is the extract's row count, observed as the
+    partitioned write runs: the ingest is the zero-row probe, the CSV
+    header and schema inference and the write — at most 4 jobs, none
+    of them a listing or re-read of the 40 written partitions."""
+    csv = tmp_path / "claim.txt"
+    n = _monthly_claims_csv(csv, months=40, per_month=3)
+    sc = spark.sparkContext
+    group = "test-bronze-ingest-jobs"
+    sc.setJobGroup(group, "bronze ingest job count")
+    try:
+        res = ingest_table(
+            spark, str(csv), TABLES["claim"], str(tmp_path / "b"), "mm",
+            "pytest", RUN_TS, mode="initial",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.count == n
+    assert spark.read.parquet(res.path).count() == n
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, jobs
+
+
+def test_run_silver_on_file_uri(spark, staged, tmp_path):
+    """run_silver probes bronze through io.fs, so a scheme-qualified
+    base (file://, and by the same API s3a://, abfss://) is found; an
+    os.path probe is False on every URI and silently skipped all
+    tables."""
+    bronze = str(tmp_path / "bronze")
+    run_bronze(
+        spark, LocalFetcher(staged), str(tmp_path / "staging"), bronze, "mm",
+        "pytest", RUN_TS, mode="initial",
+    )
+    silver_uri = f"file://{tmp_path}/silver"
+    tables = run_silver(spark, f"file://{bronze}", silver_uri, "mm", mode="merge")
+    assert sorted(tables) == ["claim", "claim_diary", "claim_payment"]
+    assert tables["claim"].count() == 3
+    assert os.path.isdir(tmp_path / "silver" / "claim")
+
+
 def test_merge_upsert_scd(spark, tmp_path):
     """Declared-but-unimplemented reference intent (SURVEY.md §2b):
     latest-per-pk wins; vanished keys soft-deleted with active='N'."""

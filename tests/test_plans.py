@@ -1071,3 +1071,33 @@ def test_ivf_graph_scores_delta_only(spark):
     assert len(trace) == 1 + GRAPH_HOPS, len(trace)
     for hop_plan in trace[1:]:
         assert "LeftAnti" in hop_plan, hop_plan[:1500]
+
+
+def test_silver_refresh_merge_is_one_pk_shuffle(spark, tmp_path):
+    """The refresh merge ranks existing ∪ incoming per pk and takes the
+    soft-delete presence from the same window: ONE Exchange, on the
+    pk, and nothing else. A second window keyed differently, a
+    pre-dedupe of the incoming batch or a key join for the soft-delete
+    flag would each add a shuffle."""
+    from datetime import datetime
+
+    from mercurygate_spark.catalog import TABLES
+    from mercurygate_spark.pipeline.silver import _merge_frame
+
+    spec = TABLES["claim"]
+    schema = "claim_number string, status_code string, updated_on timestamp, active string"
+    path = str(tmp_path / "silver_claim")
+    spark.createDataFrame(
+        [("CLM-1", "OPEN", datetime(2026, 1, 1), "Y")], schema
+    ).write.parquet(path)
+    incoming = spark.createDataFrame(
+        [("CLM-1", "CLOSED", datetime(2026, 1, 2), "Y"), ("CLM-2", "OPEN", datetime(2026, 1, 2), "Y")],
+        schema,
+    )
+    pk = spec.primary_key[0]
+    for soft_delete in (True, False):
+        merged = _merge_frame(spark.read.parquet(path), incoming, spec, soft_delete)
+        s = merged._jdf.queryExecution().executedPlan().toString()
+        assert s.count("Exchange") == 1, s
+        assert s.count(f"Exchange hashpartitioning({pk}") == 1, s
+        assert s.count("Window ") == 1, s
