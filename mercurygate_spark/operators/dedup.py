@@ -94,21 +94,6 @@ def with_shingles(
     )
 
 
-def minhash_signature(df: DataFrame, id_col: str) -> DataFrame:
-    """(id, shingles[]) → (id, m0..m{K-1}) minhash signature.
-
-    One explode + ONE grouped aggregation with K min() columns — the
-    shuffle moves K longs per doc, not the shingle set."""
-    ex = df.select(id_col, F.explode("shingles").alias("s"))
-    h0 = (md5_long(F.col("s")) % MINHASH_PRIME).alias("h0")
-    hashed = ex.select(id_col, h0)
-    aggs = [
-        F.min((F.lit(a) * F.col("h0") + F.lit(b)) % MINHASH_PRIME).alias(f"m{j}")
-        for j, (a, b) in enumerate(HASH_PARAMS)
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
-
-
 def _tokenize_py(text: str) -> list[str]:
     """Python twin of functions.tokens (same regex class, same
     empty-token filtering) for the Arrow-batched hot path."""
@@ -132,7 +117,8 @@ def minhash_signature_arrow(df: DataFrame, id_col: str, text_col: str = "text") 
     mins per doc inside one mapInPandas pass (hashlib md5 == SQL md5,
     so the DuckDB oracle is unaffected).
 
-    Why not pure Column expressions (minhash_signature above): Spark
+    Why not pure Column expressions (explode the shingles, then one
+    grouped aggregation of K affine min() columns): Spark
     evaluates higher-order-function lambdas and conv() in interpreted
     mode — ~50µs per shingle; the vectorized numpy path is ~100×
     faster and stays fully distributed (per-partition batches, no

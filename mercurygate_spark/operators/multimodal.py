@@ -332,35 +332,6 @@ def decode_video_meta(payload: bytes) -> tuple[int, str, str, int, int, int]:
     )
 
 
-def extract_video_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
-    """(id, binary) → video container metadata via mapInPandas
-    (Arrow-batched, same template as extract_binary_meta)."""
-    import pandas as pd
-
-    def video_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *decode_video_meta(bytes(p)))
-                for i, p in zip(pdf[id_col], pdf[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_bytes",
-                    "format",
-                    "brand",
-                    "width",
-                    "height",
-                    "duration_ms",
-                ],
-            )
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        video_batches, VIDEO_META_SCHEMA
-    )
-
-
 AUDIO_META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

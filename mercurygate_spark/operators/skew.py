@@ -118,14 +118,3 @@ def skew_isolated_join(
     joined_hot = fact_hot.join(F.broadcast(dim_hot), on, how)
     joined_cold = fact_cold.join(dim, on, how)
     return joined_hot.unionByName(joined_cold)
-
-
-def top_frequent_keys(df: DataFrame, key_cols: list[str], threshold: int) -> DataFrame:
-    """Skew detector: keys whose row count exceeds ``threshold`` —
-    feed to a broadcast-isolate-union plan (hot keys broadcast-joined,
-    cold keys sort-merge-joined) when AQE isn't enough."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count("*").alias("n_rows"))
-        .where(F.col("n_rows") > threshold)
-    )

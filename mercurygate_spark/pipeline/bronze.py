@@ -5,8 +5,10 @@ zero-row guard → hive-partitioned parquet under
 ``{base}/{table}/datePart={Historic|YYYY-MM-DD}/year_month=…``
 (mm_source_to_bronze.py:119-167), with the §2d anti-patterns fixed:
 
-- ONE scan (no inference+count+write triple read): the row count is
-  observed on the frame as it is written, not re-read;
+- no count pass and no re-read: the row count is observed on the frame
+  as it is written. With ``infer=True`` the CSV is still read by the
+  header probe, the schema-inference pass and the write, plus the
+  limit-1 zero-row probe;
 - first-load routing is an explicit ``mode`` parameter, not a
   filesystem probe (§7 risk 'First-load-to-Historic routing');
 - audit timestamp is a caller-supplied value, not a hidden
@@ -80,9 +82,8 @@ def ingest_table(
     """CSV extract → enriched, partitioned bronze parquet.
 
     Returns the written row count, observed on the frame during the
-    write (an ``Observation`` metric) — one upstream CSV scan total,
-    vs the reference's three, and no listing or re-read of the
-    written partitions."""
+    write (an ``Observation`` metric) — no count pass over the CSV and
+    no listing or re-read of the written partitions."""
     raw = read_csv(spark, csv_path, infer=infer)
     if raw.isEmpty():  # cheap limit-1 probe, not a full count (fixes §2d-1)
         raise ZeroRowError(f"{spec.name}: extract produced 0 rows")

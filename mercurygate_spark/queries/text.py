@@ -2785,9 +2785,6 @@ def text_ngram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(LM_TOPK).select("w1", "w2", "n_pair", "n_ctx", "logprob")
 
 
-PPL_BUCKETS = ("head", "middle", "tail")  # CCNet terciles, best first
-
-
 @query(
     "text_perplexity_filter",
     oracle=f"""

@@ -15,6 +15,21 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def pytest_report_header(config):
+    """Say up front when the whole-registry sweeps are sampled, so a
+    green default run is not read as registry-wide parity."""
+    from mercurygate_spark.queries import all_oracles
+    from tests.registry_sample import full_tests, registry_sample
+
+    if full_tests():
+        return None
+    keys = all_oracles()
+    return (
+        f"registry sweeps run the stride-4 sample: {len(registry_sample(keys))} "
+        f"of {len(keys)} oracle keys (SPARK_GRAFT_FULL_TESTS=1 runs all)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="mercurygate_spark_tests", cpus=8)

@@ -134,9 +134,10 @@ def _monthly_claims_csv(path, months: int, per_month: int) -> int:
 
 def test_bronze_count_comes_from_the_write(spark, tmp_path):
     """BronzeResult.count is the extract's row count, observed as the
-    partitioned write runs: the ingest is the zero-row probe, the CSV
-    header and schema inference and the write — at most 4 jobs, none
-    of them a listing or re-read of the 40 written partitions."""
+    partitioned write runs: the ingest is the CSV header probe, the
+    schema inference, the zero-row probe, the shuffle map that clusters
+    rows by year_month and the write — at most 5 jobs, none of them a
+    listing or re-read of the 40 written partitions."""
     csv = tmp_path / "claim.txt"
     n = _monthly_claims_csv(csv, months=40, per_month=3)
     sc = spark.sparkContext
@@ -153,7 +154,38 @@ def test_bronze_count_comes_from_the_write(spark, tmp_path):
     assert res.count == n
     assert spark.read.parquet(res.path).count() == n
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 4, jobs
+    assert 0 < len(jobs) <= 5, jobs
+
+
+def test_bronze_writes_one_file_per_month_in_parallel(spark, tmp_path):
+    """The partitioned write clusters rows by year_month first: a
+    40-month extract is 40 parquet files under its datePart, one per
+    month, written by more than one task — the extract is a single CSV
+    split, so without the repartition one task would create them all."""
+    csv = tmp_path / "claim.txt"
+    _monthly_claims_csv(csv, months=40, per_month=3)
+    sc = spark.sparkContext
+    group = "test-bronze-write-tasks"
+    sc.setJobGroup(group, "bronze write task count")
+    try:
+        res = ingest_table(
+            spark, str(csv), TABLES["claim"], str(tmp_path / "b"), "mm",
+            "pytest", RUN_TS, mode="initial",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    files = {
+        os.path.basename(d): [f for f in fs if f.endswith(".parquet")]
+        for d, _, fs in os.walk(res.path)
+        if os.path.basename(d).startswith("year_month=")
+    }
+    assert len(files) == 40
+    assert all(len(fs) == 1 for fs in files.values()), files
+    tracker = sc.statusTracker()
+    write_job = max(tracker.getJobIdsForGroup(group))
+    write_stage = max(tracker.getJobInfo(write_job).stageIds)
+    assert tracker.getStageInfo(write_stage).numCompletedTasks > 1
 
 
 def test_run_silver_on_file_uri(spark, staged, tmp_path):

@@ -7,6 +7,8 @@ these would still pass the value checks; these tests pin the plan.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -246,6 +248,40 @@ def test_partition_pruning_on_hive_layout(spark, tmp_path):
     full = spark.read.parquet(path)
     expected = full.where(F.col("year_month") == "1997-03").count()
     assert df.count() == expected and expected > 0
+
+
+def _last_execution_plan(spark) -> list[str]:
+    """Node descriptions of the final (post-AQE) physical plan of the
+    session's most recent SQL execution — how a write's plan is seen,
+    since ``DataFrameWriter`` returns no DataFrame to explain."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    nodes = store.planGraph(execs.apply(execs.size() - 1).executionId()).allNodes()
+    return [nodes.apply(i).desc() for i in range(nodes.size())]
+
+
+def test_partitioned_write_clusters_by_partition_column(spark, tmp_path):
+    """A partitioned write hash-partitions on the partition column into
+    defaultParallelism partitions — its only shuffle — and sorts
+    within them: each year_month is one task's one file, the files are
+    spread over the cores, and a task holds one open writer at a time."""
+    from mercurygate_spark.functions import month_bucket
+    from mercurygate_spark.io.writers import write_parquet_partitioned
+
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    write_parquet_partitioned(
+        orders.withColumn("year_month", month_bucket("o_orderdate")),
+        str(tmp_path / "orders_part"),
+        partition_by=["year_month"],
+    )
+    plan = _last_execution_plan(spark)
+    assert any(d.startswith("Execute InsertIntoHadoopFsRelationCommand") for d in plan)
+    exchanges = [d for d in plan if d.startswith("Exchange")]
+    n = spark.sparkContext.defaultParallelism
+    assert len(exchanges) == 1, exchanges
+    assert re.match(rf"Exchange hashpartitioning\(year_month#\d+, {n}\)", exchanges[0])
+    assert any(re.match(r"Sort \[year_month#\d+ ASC", d) for d in plan), plan
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
