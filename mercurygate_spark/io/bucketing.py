@@ -40,10 +40,13 @@ def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     name) applied to index maintenance: the new index is built and
     VALIDATED under ``staging`` while readers keep serving the old
     table; the swap itself is two catalog renames plus a drop, never a
-    data copy. Same atomicity caveat as compact_bucketed's swap: a
-    crash between the renames can leave the live name missing (at
-    100 TB this runs under the ingest job's retry/lock, or on
-    Delta/Iceberg where the swap is one transaction).
+    data copy, and it is the engine's only catalog-table swap (the
+    path-based twin is io.writers.publish). The live table's data is
+    never deleted before the replacement holds the live name, but a
+    crash between the renames leaves only ``__old`` — unlike
+    ``publish`` there is no recovery on entry yet (at 100 TB this runs
+    under the ingest job's retry/lock, or on Delta/Iceberg where the
+    swap is one transaction).
 
     Reader safety is BOUNDED, not absolute (ADVICE r10): readers
     planned before the swap keep working only until the final DROP of
@@ -84,11 +87,8 @@ def compact_bucketed(
     scan (autoBucketedScan), leaving arbitrary task↔bucket alignment —
     which is why the conf pin is the mechanism, not a hint.
 
-    The swap is write-staging → drop → rename: not atomic (a crash
-    between drop and rename loses the catalog entry — at 100 TB this
-    runs under the ingest job's retry/lock, or on Delta/Iceberg where
-    the swap is a transaction); readers planned BEFORE the swap keep
-    working off the old file listing.
+    The rewrite is written under a staging name and swapped in with
+    ``swap_bucketed`` (see its crash and reader-safety caveats).
 
     Returns the compacted file count (== n_buckets). Plan contract
     (pinned in tests/test_plans.py): a probe join against the
@@ -111,6 +111,5 @@ def compact_bucketed(
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
+    swap_bucketed(spark, table_name, staging)
     return len(spark.table(table_name).inputFiles())

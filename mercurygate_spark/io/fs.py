@@ -39,12 +39,13 @@ def delete_path(spark: SparkSession, path: str, recursive: bool = True) -> bool:
 
 def rename_path(spark: SparkSession, src: str, dst: str) -> None:
     """Scheme-aware rename (move). On local disk and HDFS this is a
-    metadata-only directory move — the cheap half of a
-    write-to-staging-then-swap publish (guide §6: a staged table swap
-    must not re-write the bytes it just wrote). On object stores
-    without atomic rename (s3a) the FileSystem implementation falls
-    back to a server-side copy — still no recompute and no Spark job.
-    Raises when the filesystem refuses the rename (e.g. dst exists)."""
+    metadata-only directory move; on object stores without atomic
+    rename (s3a) the FileSystem implementation falls back to a
+    server-side copy — no recompute and no Spark job either way. Only
+    ``io.writers.publish``/``published`` call it (pinned by
+    tests/test_merge_semantics.py): every table swap goes through that
+    one crash-safe sequence. Raises when the filesystem refuses the
+    rename."""
     fs, jsrc = _fs_and_path(spark, src)
     _, jdst = _fs_and_path(spark, dst)
     if not fs.rename(jsrc, jdst):

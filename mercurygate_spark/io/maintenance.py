@@ -6,13 +6,17 @@ The reference sidesteps compaction by rewriting every table daily
 (mm_bronze_silver.py:271); at 100 TB that's not an option — instead,
 periodic compaction bounds file counts and clustering keeps row-group
 min/max statistics selective so filter pushdown can skip row groups.
+
+Both rewrite the table once and swap it in with io.writers.publish:
+the rewritten frame reads the live table, so it goes to a staging
+directory that is renamed into place — no second write of the bytes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from mercurygate_spark.io.writers import read_delta_or_parquet, write_delta_or_parquet
+from mercurygate_spark.io.writers import publish, read_delta_or_parquet
 
 
 def compact_parquet(
@@ -24,7 +28,7 @@ def compact_parquet(
     file count. Size estimate comes from the existing footprint via the
     Hadoop FileSystem API (one listing, scheme-aware — io.fs) — no data
     scan before the rewrite job itself."""
-    from mercurygate_spark.io.fs import delete_path, dir_size_bytes, path_exists
+    from mercurygate_spark.io.fs import dir_size_bytes, path_exists
 
     total = dir_size_bytes(spark, path)
     # ContentSummary counts everything under the dir; exclude the Delta
@@ -34,12 +38,7 @@ def compact_parquet(
     if path_exists(spark, log_dir):
         total = max(0, total - dir_size_bytes(spark, log_dir))
     n_files = max(1, round(total / target_file_bytes))
-    df = read_delta_or_parquet(spark, path)
-    staging = path.rstrip("/") + "__compact"
-    write_delta_or_parquet(df.repartition(n_files), staging, mode="overwrite")
-    final = read_delta_or_parquet(spark, staging)
-    write_delta_or_parquet(final, path, mode="overwrite")
-    delete_path(spark, staging)
+    publish(read_delta_or_parquet(spark, path).repartition(n_files), path)
     return n_files
 
 
@@ -54,15 +53,9 @@ def cluster_by(
     a disjoint key range, so parquet row-group min/max stats make
     key-range filters skip whole files/row groups — the plain-parquet
     analogue of Delta ZORDER for one clustering dimension."""
-    from mercurygate_spark.io.fs import delete_path
-
     df = read_delta_or_parquet(spark, path)
     # file-count default from scan metadata, not df.rdd (which would
     # force a logical→RDD conversion and hide the plan from AQE)
     parts = n_files or max(1, len(df.inputFiles()))
     clustered = df.repartitionByRange(parts, *sort_cols).sortWithinPartitions(*sort_cols)
-    staging = path.rstrip("/") + "__cluster"
-    write_delta_or_parquet(clustered, staging, mode="overwrite")
-    final = read_delta_or_parquet(spark, staging)
-    write_delta_or_parquet(final, path, mode="overwrite")
-    delete_path(spark, staging)
+    publish(clustered, path)

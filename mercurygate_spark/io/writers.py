@@ -80,19 +80,73 @@ def write_delta_or_parquet(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    overwrite_schema: bool = True,
-    partition_by: list[str] | None = None,
 ) -> str:
     """Reference K2 (mm_bronze_silver.py:230): Delta overwrite with
     overwriteSchema when Delta is on the classpath, else parquet.
     Returns the format actually used ('delta' | 'parquet')."""
     fmt = "delta" if delta_available(df.sparkSession) else "parquet"
     w = df.write.format(fmt).mode(mode)
-    if fmt == "delta" and overwrite_schema:
+    if fmt == "delta":
         w = w.option("overwriteSchema", "true")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
     w.save(path)
+    return fmt
+
+
+def published(spark: SparkSession, path: str) -> bool:
+    """Whether a table published by ``publish`` exists at ``path`` —
+    the probe every first-load-vs-refresh routing decision uses.
+
+    A publish interrupted between its two renames leaves the previous
+    table under ``path__old`` and nothing at ``path``; this probe moves
+    it back first, so a crash sends the next load down the refresh
+    branch against the previous table instead of silently rebuilding
+    it as a first load."""
+    from mercurygate_spark.io.fs import path_exists, rename_path
+
+    root = path.rstrip("/")
+    if not path_exists(spark, root) and path_exists(spark, root + "__old"):
+        rename_path(spark, root + "__old", root)
+    return path_exists(spark, root)
+
+
+def publish(df: DataFrame, path: str) -> str:
+    """Replace the whole table at ``path`` with ``df`` — the reference's
+    snapshot-replace (mm_bronze_silver.py:230) as the engine's single
+    publish primitive. ``df`` may read ``path`` itself (a merge over the
+    live table): it is written once to ``path__staging`` and the bytes
+    are never rewritten. Steps:
+
+    1. recover an interrupted publish (``published``), then drop the
+       stale ``__old`` / ``__staging`` siblings it may have left;
+    2. write ``path__staging`` (the only Spark job);
+    3. rename the live table aside to ``path__old``;
+    4. rename staging to ``path``;
+    5. delete ``path__old``;
+    6. ``refreshByPath``: the renames happened behind Spark's back, so
+       cached listings of ``path`` are dropped.
+
+    At every point either the previous table (at ``path`` or
+    ``path__old``) or the new one (at ``path``) is intact, so a crash
+    at any step followed by a replay of the same load converges to the
+    table a clean run writes. Steps 3–5 are FileSystem metadata calls
+    (io.fs): a directory move on local disk and HDFS, a server-side
+    copy on object stores without atomic rename — no Spark job either
+    way. On Delta the new table brings its own log, so time travel does
+    not reach across a publish. Returns the format written."""
+    from mercurygate_spark.io.fs import delete_path, path_exists, rename_path
+
+    spark = df.sparkSession
+    root = path.rstrip("/")
+    staging, old = root + "__staging", root + "__old"
+    published(spark, root)
+    delete_path(spark, old)
+    delete_path(spark, staging)
+    fmt = write_delta_or_parquet(df, staging)
+    if path_exists(spark, root):
+        rename_path(spark, root, old)
+    rename_path(spark, staging, root)
+    delete_path(spark, old)
+    spark.catalog.refreshByPath(root)
     return fmt
 
 

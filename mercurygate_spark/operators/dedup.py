@@ -451,25 +451,12 @@ def duck_incremental_dedup_sql(id_col: str = "doc_id", table: str = "documents")
     """
 
 
-# Star rounds between localCheckpoints. K=2 (chain two large-star/
-# small-star rounds lazily per materialization) was probed in r16 per
-# VERDICT r15 #6 and is a measured NEGATIVE: the second round's
-# large_star/small_star each reference their un-materialized input
-# twice (nbrs groupBy + join), so the first round's whole subtree
-# re-evaluates inside the batch — dedup_connected_components went
-# 32→62 jobs / 3.4→9.9 s, er_cluster 50→68 / 3.1→6.2, pair_cluster
-# 38→68 / 4.4→9.0 (docs/cc_cadence_probe_r16.json). Confirms the r10
-# cadence measurement: checkpoint EVERY round is the floor.
-CC_CHK_EVERY = 1
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
     on_round=None,
-    chk_every: int = CC_CHK_EVERY,
 ) -> DataFrame:
     """Distributed connected components over a candidate-pair graph via
     alternating large-star / small-star (Kiveris et al., "Connected
@@ -526,37 +513,26 @@ def connected_components(
     edges = edges.localCheckpoint(eager=True)
     n_edges = edges.count()
     converged = False
-    k = max(1, chk_every)
-    rnd = 0
-    while rnd < max_iter and not converged:
+    for rnd in range(max_iter):
         _t0 = _time.monotonic() if on_round else 0.0
-        # chain up to k star rounds LAZILY, checkpoint once: the
-        # intermediate round's edges are never counted/compared, so
-        # each batch costs one materialization + one count instead of
-        # k of each (each removed job = one full edge-set pass at scale)
-        steps = min(k, max_iter - rnd)
-        new_edges = edges
-        for _ in range(steps):
-            new_edges = small_star(large_star(new_edges))
-        new_edges = new_edges.localCheckpoint(eager=True)
-        rnd += steps
+        # One star round per localCheckpoint. Chaining two rounds
+        # lazily per checkpoint was measured worse: the second round's
+        # large_star/small_star each reference their un-materialized
+        # input twice (nbrs groupBy + join), so the first round's whole
+        # subtree re-evaluates — dedup_connected_components went 32→62
+        # jobs / 3.4→9.9 s, er_cluster 50→68 / 3.1→6.2, pair_cluster
+        # 38→68 / 4.4→9.0 (docs/cc_cadence_probe_r16.json).
+        new_edges = small_star(large_star(edges)).localCheckpoint(eager=True)
         # Both frames are distinct by construction, so set equality is
         # |new| == |old| plus new ⊆ old — one exceptAll job instead of
         # two, on already-materialized (checkpointed) inputs.
         n_new = new_edges.count()
-        equal = n_new == n_edges and new_edges.exceptAll(edges).isEmpty()
-        if equal:
-            if steps == 1:
-                converged = True
-            else:
-                # f^k(X) == X alone does not certify a SINGLE-round
-                # fixpoint (the returned edge set must be star-shaped);
-                # drop to single rounds — the next iteration re-runs
-                # one round over the (tiny, converged) set and confirms
-                k = 1
+        converged = n_new == n_edges and new_edges.exceptAll(edges).isEmpty()
         edges, n_edges = new_edges, n_new
         if on_round is not None:  # instrumentation hook (scripts/stage_probe.py)
-            on_round(rnd - 1, n_new, _time.monotonic() - _t0)
+            on_round(rnd, n_new, _time.monotonic() - _t0)
+        if converged:
+            break
     if not converged:
         # A non-fixpoint labeling would silently drop/keep documents on
         # wrong components downstream — fail loudly instead. O(log² n)

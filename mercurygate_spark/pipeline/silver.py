@@ -13,21 +13,20 @@ columns, flag active='Y', overwrite Delta (mm_bronze_silver.py:
   active='Y' forever and never flips it — mm_bronze_silver.py:222).
 
 Merge is implemented Delta-free as union + one pk-ranked window +
-overwrite (Delta format when the classpath has it — io.writers
+io.writers.publish (Delta format when the classpath has it — io.writers
 probes). At scale the union shuffles once on the pk; AQE handles
 skew.
 """
 
 from __future__ import annotations
 
+from urllib.parse import quote
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mercurygate_spark.catalog import TableSpec
-from mercurygate_spark.io.writers import (
-    read_delta_or_parquet,
-    write_delta_or_parquet,
-)
+from mercurygate_spark.io.writers import publish, published, read_delta_or_parquet
 from mercurygate_spark.pipeline.conform import (
     add_soft_delete_flag,
     dedupe_latest,
@@ -47,34 +46,10 @@ def conform(df: DataFrame, spec: TableSpec) -> DataFrame:
 
 
 def publish_snapshot(df: DataFrame, spec: TableSpec, path: str) -> str:
-    """Reference-parity publish: dedupe to latest per pk, then
-    overwrite (the reference's snapshot-replace, K2)."""
+    """Reference-parity publish: dedupe to latest per pk, then replace
+    the table (the reference's snapshot-replace, K2)."""
     latest = dedupe_latest(df, spec.primary_key, spec.order_by, tiebreakers=None)
-    return write_delta_or_parquet(latest, path, mode="overwrite")
-
-
-def _staged_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Publish ``df`` over a path its own plan READS: write once to a
-    staging dir, then swap the staging dir in with a filesystem rename
-    (io.fs.rename_path — metadata-only on local disk/HDFS).
-
-    This used to re-read the staging dir and write the bytes a SECOND
-    time to the final path; per merge that doubled the write volume of
-    the whole table (at 100 TB, a full extra history write per load —
-    guide §6). The rename publishes the identical files with zero
-    additional Spark jobs. The staging hop itself can't be skipped:
-    the merged frame's lineage reads ``path``, so overwriting it in
-    place would clobber the merge's own input mid-job."""
-    from mercurygate_spark.io.fs import delete_path, rename_path
-
-    staging = path.rstrip("/") + "__staging"
-    write_delta_or_parquet(df, staging, mode="overwrite")
-    delete_path(spark, path)
-    rename_path(spark, staging, path)
-    # the rename happened behind Spark's back — drop any cached file
-    # listing/data for both paths so the next read lists fresh
-    spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(staging)
+    return publish(latest, path)
 
 
 def _merge_frame(
@@ -137,39 +112,43 @@ def merge_upsert_scd(
     exact ties) — with presence taken from the same window. One
     shuffle on the pk; no rows are collected to Python.
 
-    Path probes and staging cleanup go through the Hadoop FileSystem
-    API (io.fs) so the first-load/refresh routing works on s3a://,
-    abfss://, hdfs:// — not just the driver's local disk (the
-    reference's os.path.exists bug, SURVEY.md §2d-3)."""
-    from mercurygate_spark.io.fs import path_exists
-
-    if not path_exists(spark, path):
+    Both branches write through ``io.writers.publish`` and route on
+    ``published``, which probes through the Hadoop FileSystem API (so
+    the routing works on s3a://, abfss://, hdfs:// — the reference's
+    os.path.exists bug, SURVEY.md §2d-3) and restores a table stranded
+    by a crashed publish, so a replay after a crash at any step
+    converges to the table a clean run writes."""
+    if not published(spark, path):
         incoming_latest = dedupe_latest(incoming, spec.primary_key, spec.order_by)
-        write_delta_or_parquet(incoming_latest, path, mode="overwrite")
+        publish(incoming_latest, path)
         return incoming_latest
     existing = read_delta_or_parquet(spark, path)
-    _staged_swap(spark, _merge_frame(existing, incoming, spec, soft_delete_missing), path)
+    publish(_merge_frame(existing, incoming, spec, soft_delete_missing), path)
     return read_delta_or_parquet(spark, path)
 
 
 def _scd2_dirs(path: str) -> tuple[str, str]:
     """The SCD2 table's two physical partitions: ``open/`` (the live
-    version per key — overwritten per load via staged swap) and
-    ``closed/`` (finished versions — append-only, never read by the
-    merge and never rewritten)."""
+    version per key — replaced per load by ``publish``) and ``closed/``
+    (finished versions, one ``load_ts=<ts>`` subdirectory per load —
+    published once, never read by the merge and never rewritten)."""
     root = path.rstrip("/")
     return root + "/open", root + "/closed"
 
 
 def read_scd2_history(spark: SparkSession, path: str) -> DataFrame:
     """Full SCD2 history = open ∪ closed. The ONLY reader of the
-    closed partition — the merge itself never scans it."""
+    closed partition — the merge itself never scans it. ``closed/`` is
+    read as one recursive file listing, so the per-load subdirectories
+    add no inferred partition column (and a Delta load's ``_delta_log``
+    is skipped as a hidden directory: each load dir is written once)."""
     from mercurygate_spark.io.fs import path_exists
 
     o_dir, c_dir = _scd2_dirs(path)
     out = read_delta_or_parquet(spark, o_dir)
     if path_exists(spark, c_dir):
-        out = out.unionByName(read_delta_or_parquet(spark, c_dir))
+        closed = spark.read.option("recursiveFileLookup", "true").parquet(c_dir)
+        out = out.unionByName(closed)
     return out
 
 
@@ -198,15 +177,23 @@ def merge_upsert_scd2(
     - VANISHED key       → close the open row, no successor.
     Closed history rows are never rewritten — PHYSICALLY: the table
     is two partitions (``path/open`` and ``path/closed``, see
-    _scd2_dirs); the merge reads ONLY the open rows, APPENDS the newly
-    closed versions to ``closed/``, and staged-swaps the new open set.
+    _scd2_dirs); the merge reads ONLY the open rows, publishes the
+    newly closed versions as this load's own ``closed/load_ts=<ts>``
+    subdirectory, then publishes the new open set over ``open/``.
     Per load the scan volume is O(live keys) and the write volume is
     O(live keys + changes) — not O(full history) for both, which is
     what the previous single-dir layout paid (at 100 TB, every load
     re-read and re-wrote years of closed versions just to carry them
-    across the overwrite). ``closed/`` accumulates one file set per
-    load; at scale that is the append-only date-partitioned history
-    every lakehouse compacts on its own schedule.
+    across the overwrite). ``closed/`` accumulates one subdirectory per
+    load; at scale that is the date-partitioned history every lakehouse
+    compacts on its own schedule.
+
+    Crash safety: a load is idempotent at every step. Its closed rows
+    are published only if ``closed/load_ts=<ts>`` is not published yet
+    — a retry after the closed publish (whether or not ``open/`` was
+    replaced) finds them and writes nothing twice; a retry before it
+    recomputes the identical rows from the unchanged ``open/``. Both
+    publishes recover an interrupted swap first (io.writers.publish).
 
     Plan: reduce incoming to ONE row per pk first (order_by DESC when
     supplied, else a deterministic md5 pick — same contract as
@@ -219,8 +206,6 @@ def merge_upsert_scd2(
     transition counts as a change). Timestamps are caller-supplied
     strings so replay/backfill is deterministic — no wall-clock reads
     inside the merge."""
-    from mercurygate_spark.io.fs import path_exists
-
     incoming = dedupe_latest(incoming, pk, order_by or []).select(*pk, *tracked)
     o_dir, c_dir = _scd2_dirs(path)
 
@@ -233,9 +218,8 @@ def merge_upsert_scd2(
             F.lit(True).alias("is_current"),
         )
 
-    if not path_exists(spark, o_dir):
-        out = open_row(incoming)
-        write_delta_or_parquet(out, o_dir, mode="overwrite")
+    if not published(spark, o_dir):
+        publish(open_row(incoming), o_dir)
         return read_scd2_history(spark, path)
 
     # the merge scans ONLY the live rows; closed history stays on disk
@@ -263,12 +247,13 @@ def merge_upsert_scd2(
             *pk, *[F.col(f"i.{c}").alias(c) for c in tracked]
         )
     )
-    # newly closed versions append to the closed partition (the only
-    # write it ever sees); the new open set staged-swaps into open/.
-    # The append must land BEFORE the swap: to_close reads open/, and
-    # both frames read it through the full-outer join above — the
-    # append materializes to_close while its input still exists.
-    write_delta_or_parquet(to_close, c_dir, mode="append")
-    new_open = unchanged.unionByName(to_insert)
-    _staged_swap(spark, new_open, o_dir)
+    # this load's closed versions land in their own subdirectory (the
+    # load_ts is percent-quoted into a safe, injective directory name),
+    # BEFORE open/ is replaced: to_close reads open/ through the join
+    # above, so it must materialize while its input is still the
+    # pre-load open set.
+    c_load = f"{c_dir}/load_ts={quote(load_ts, safe='')}"
+    if not published(spark, c_load):
+        publish(to_close, c_load)
+    publish(unchanged.unionByName(to_insert), o_dir)
     return read_scd2_history(spark, path)

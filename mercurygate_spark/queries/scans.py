@@ -1016,9 +1016,8 @@ def sink_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per load, ONE pk-shuffle full-outer join between the
     open rows and the incoming snapshot plus a closed-partition union
-    — closed history is never rewritten row-by-row (at 100 TB the
-    closed partition would be date-partitioned parquet appends; here
-    it rides the same overwrite as the staging swap)."""
+    — closed history is never rewritten (each load publishes its
+    closed versions as their own ``closed/load_ts=<ts>`` directory)."""
     import shutil as _shutil
 
     from mercurygate_spark.pipeline.silver import merge_upsert_scd2
@@ -1030,8 +1029,9 @@ def sink_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         return scd2_generation(cust, g)
 
     path = _tmp("scd2_history")
+    # every publish sibling (open__staging, open__old, closed/*__staging)
+    # lives under path, so one delete clears a crashed earlier run
     _shutil.rmtree(path, ignore_errors=True)
-    _shutil.rmtree(path + "__staging", ignore_errors=True)
     hist = None
     for g in sorted(_SCD2_TS):
         hist = merge_upsert_scd2(

@@ -1475,16 +1475,15 @@ def stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     land as separate files, a maxFilesPerTrigger=1 availableNow query
     delivers them as separate micro-batches, and a foreachBatch
     handler merges each into the persisted latest-per-key vector
-    source (read → union → latest-wins window on (k, seq) → staging
-    write → rename-aside dir swap — the Delta-free MERGE fallback; the
-    swap renames the old state aside as __prev BEFORE promoting the
-    staging dir and deletes __prev last, so a crash at any point
-    leaves either the old or the new state recoverable: merge_batch
-    restores a stranded __prev on entry, which is what makes
-    checkpoint REPLAY safe — without it a replayed batch would see no
-    prior state and silently become the whole 'latest' (ADVICE r10);
-    latest-wins by seq makes the result independent of how the log is
-    micro-batched, the same idempotency argument as the silver merge).
+    source (read → union → latest-wins window on (k, seq) →
+    io.writers.publish — the Delta-free MERGE fallback; publish keeps
+    either the old or the new state recoverable at every step and
+    ``published`` restores a stranded one on entry, which is what
+    makes checkpoint REPLAY safe — without it a replayed batch would
+    see no prior state and silently become the whole 'latest' (ADVICE
+    r10); latest-wins by seq makes the result independent of how the
+    log is micro-batched, the same idempotency argument as the silver
+    merge).
     After the stream drains, the rest of the cycle is the batch key
     unchanged: tombstone filter → content-key dedup gate → frozen
     encode → bucketed append → probe. Oracle: IDENTICAL to
@@ -1498,6 +1497,7 @@ def stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mercurygate_spark.io.bucketing import write_bucketed
     from mercurygate_spark.io.tmp_tables import register_tmp_dir, register_tmp_table
+    from mercurygate_spark.io.writers import publish, published, read_delta_or_parquet
 
     t = load_tables(spark, sf_dir, "embeddings")
     e = t["embeddings"].select(
@@ -1515,9 +1515,10 @@ def stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     logdir = _os.path.join(root, "log")
     latest_path = _os.path.join(root, "latest")
     ckpt = _os.path.join(root, "ckpt")
-    for p in (logdir, latest_path, ckpt):
-        if _os.path.exists(p):
-            _shutil.rmtree(p)
+    # clears the previous run's state wholesale, including publish's
+    # latest__staging / latest__old siblings: a stale __old left by a
+    # crashed run would otherwise be restored into this one
+    _shutil.rmtree(root, ignore_errors=True)
     _os.makedirs(logdir)
 
     def log_frame(df, key_col, emb, seq, op):
@@ -1566,35 +1567,16 @@ def stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def merge_batch(bdf, batch_id):
-        prev = latest_path + "__prev"
-        # crash/replay recovery: a failure between the two renames
-        # below strands the old state under __prev with no live dir —
-        # restore it so a checkpoint-replayed batch merges against the
-        # prior waves instead of silently becoming the whole 'latest'
-        if not _os.path.exists(latest_path) and _os.path.exists(prev):
-            _os.rename(prev, latest_path)
-        cur_files = _os.path.exists(latest_path)
-        if cur_files:
-            allr = bdf.sparkSession.read.parquet(latest_path).unionByName(bdf)
-        else:
-            allr = bdf
+        allr = bdf
+        if published(bdf.sparkSession, latest_path):
+            allr = read_delta_or_parquet(bdf.sparkSession, latest_path).unionByName(bdf)
         w = Window.partitionBy("k").orderBy(F.col("seq").desc())
         latest = (
             allr.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        stage = latest_path + "__stage"
-        latest.write.mode("overwrite").parquet(stage)
-        # rename-aside swap: old → __prev, stage → live, delete __prev
-        # LAST — at every intermediate point either the old or the new
-        # state is intact on disk (plain rmtree-then-rename would lose
-        # all merged state if the process died between the two calls)
-        _shutil.rmtree(prev, ignore_errors=True)
-        if cur_files:
-            _os.rename(latest_path, prev)
-        _os.rename(stage, latest_path)
-        _shutil.rmtree(prev, ignore_errors=True)
+        publish(latest, latest_path)
 
     q = (
         stream.writeStream.foreachBatch(merge_batch)
@@ -1605,7 +1587,7 @@ def stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
 
     batch_final = (
-        spark.read.parquet(latest_path)
+        read_delta_or_parquet(spark, latest_path)
         .where(F.col("op") != "D")
         .select(F.col("k").alias("vec_id"), "embedding")
     )

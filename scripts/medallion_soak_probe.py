@@ -6,7 +6,7 @@ merge wall-clock and the silver file/row counts — the two curves that
 decide whether a long-lived silver table needs maintenance wired in.
 
 Expected shape (and why): merge_upsert_scd publishes via
-staging-overwrite, so each generation REWRITES the current table —
+io.writers.publish, so each generation REWRITES the current table —
 file count stays bounded by the final write's partitioning and
 wall-clock stays flat in table size (the table here is
 ~|orders| keys for every generation; vanished keys persist with

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F  # noqa: F401 (parity with sibling tests)
 
 from mercurygate_spark.catalog import TableSpec
@@ -356,3 +357,172 @@ def test_scd2_structural_invariants_random(spark, tmp_path):
                 and (r["valid_to"] is None or order[r["valid_to"]] > i)
             ]
             assert len(cover) == 1 and cover[0]["v"] == v, (k, i, v, cover)
+
+
+# ---------------------------------------------------------------------------
+# Crash safety: every whole-table write goes through io.writers.publish
+# ---------------------------------------------------------------------------
+
+class _Crash(RuntimeError):
+    """The injected failure."""
+
+
+def _publish_steps():
+    """step → (owner, attribute, which calls count as the step). The
+    staging write is every Spark write a load makes (a merge writes
+    nothing but publish staging dirs); the FileSystem steps are told
+    apart by the sibling they move or delete."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mercurygate_spark.io import fs
+
+    return {
+        "staging write": (DataFrameWriter, "save", lambda *a, **k: True),
+        "rename-aside": (fs, "rename_path", lambda _s, src, dst: dst.endswith("__old")),
+        "promote": (fs, "rename_path", lambda _s, src, dst: src.endswith("__staging")),
+        "delete-aside": (fs, "delete_path", lambda _s, p, *a, **k: p.endswith("__old")),
+    }
+
+
+def _inject(m, step, fail_at=None):
+    """Wrap ``step``'s function on monkeypatch context ``m``: count the
+    matching calls and raise _Crash INSTEAD of making call ``fail_at``.
+    Returns the running count."""
+    owner, name, hit = _publish_steps()[step]
+    real = getattr(owner, name)
+    seen = [0]
+
+    def wrapper(*args, **kwargs):
+        if hit(*args, **kwargs):
+            seen[0] += 1
+            if seen[0] == fail_at:
+                raise _Crash(f"{step} call {fail_at}")
+        return real(*args, **kwargs)
+
+    m.setattr(owner, name, wrapper)
+    return seen
+
+
+def _crash_then_replay(monkeypatch, tmp_path, seed, load, snapshot):
+    """For every publish step and every call of it a clean ``load``
+    makes, crash the load there, replay the same load, and assert the
+    table equals the clean run's. Returns the clean snapshot."""
+    import shutil
+
+    seeded = tmp_path / "seeded"
+    seed(str(seeded))
+    clean = tmp_path / "clean"
+    shutil.copytree(seeded, clean)
+    with monkeypatch.context() as m:
+        counts = {step: _inject(m, step) for step in _publish_steps()}
+        load(str(clean))
+    want = snapshot(str(clean))
+    for step, seen in counts.items():
+        for n in range(1, seen[0] + 1):
+            path = tmp_path / f"{step.replace(' ', '_')}_{n}"
+            shutil.copytree(seeded, path)
+            with monkeypatch.context() as m, pytest.raises(_Crash):
+                _inject(m, step, fail_at=n)
+                load(str(path))
+            load(str(path))
+            assert snapshot(str(path)) == want, f"replay after a crash at {step} call {n}"
+    assert all(seen[0] for seen in counts.values()), "a clean load skips a publish step"
+    return want
+
+
+def test_merge_converges_after_a_crash_at_any_publish_step(spark, monkeypatch, tmp_path):
+    """SCD1: a crash at the staging write, the rename-aside, the
+    promote or the delete-aside of the merge's publish, then a replay
+    of the same extract, leaves exactly the table a clean merge writes
+    — soft-deleted rows included, which a replay down the first-load
+    branch would drop."""
+    from mercurygate_spark.io.writers import read_delta_or_parquet
+
+    target = [(1, 1, "t1", "Y"), (2, 1, "t2", "Y"), (3, 1, "t3", "N")]
+    incoming = [(1, 2, "s1", "Y"), (4, 1, "s4", "Y")]
+    want = _crash_then_replay(
+        monkeypatch, tmp_path,
+        seed=lambda p: _seed(spark, p, target),
+        load=lambda p: merge_upsert_scd(spark, _df(spark, incoming), SPEC, p),
+        snapshot=lambda p: _table(read_delta_or_parquet(spark, p)),
+    )
+    assert want == delta_merge_model({r[0]: r for r in target}, incoming)
+    assert want[2] == (2, 1, "t2", "N") and want[3] == (3, 1, "t3", "N")
+
+
+def test_scd2_converges_after_a_crash_at_any_publish_step(spark, monkeypatch, tmp_path):
+    """SCD2: the same crash matrix over both of a load's publishes —
+    the closed-history write (``closed/load_ts=<ts>``, published first)
+    and the open-set swap. After each crash and a replay the history
+    equals a clean run's, and no (pk, valid_to) pair is duplicated."""
+    from collections import Counter
+
+    from mercurygate_spark.pipeline.silver import read_scd2_history
+
+    def history(p):
+        return sorted(
+            tuple(r) for r in read_scd2_history(spark, p)
+            .select("k", "v", "valid_from", "valid_to", "is_current").collect()
+        )
+
+    want = _crash_then_replay(
+        monkeypatch, tmp_path,
+        seed=lambda p: _scd2_apply(spark, p, [(1, "a"), (2, "b"), (3, "c")], "t1"),
+        load=lambda p: _scd2_apply(spark, p, [(1, "a"), (2, "B"), (4, "d")], "t2"),
+        snapshot=history,
+    )
+    assert want == sorted([
+        (1, "a", "t1", None, True),
+        (2, "b", "t1", "t2", False),
+        (2, "B", "t2", None, True),
+        (3, "c", "t1", "t2", False),
+        (4, "d", "t2", None, True),
+    ])
+    closed = Counter((k, vt) for k, _v, _vf, vt, _c in want if vt is not None)
+    assert max(closed.values()) == 1
+
+
+def test_scd2_load_ts_with_path_characters(spark, tmp_path):
+    """A load_ts is free text; its closed/ subdirectory name must not
+    break the path (':' and ' ' in a timestamp) and the history must
+    carry no column inferred from that name."""
+    p = tmp_path / "scd2ts"
+    _scd2_apply(spark, p, [(1, "a")], "2024-01-01 00:00:00")
+    hist = _scd2_apply(spark, p, [(1, "b")], "2024-02-01 00:00:00")
+    assert hist.columns == ["k", "v", "valid_from", "valid_to", "is_current"]
+    assert _hist_set(hist) == {
+        (1, "a", "2024-01-01 00:00:00", "2024-02-01 00:00:00", False),
+        (1, "b", "2024-02-01 00:00:00", None, True),
+    }
+
+
+def test_only_publish_renames_tables():
+    """Every table swap goes through io.writers.publish/published: no
+    other function in the program calls io.fs.rename_path, so a second
+    swap sequence cannot come back unnoticed."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    files = [*(repo / "mercurygate_spark").rglob("*.py"), *(repo / "scripts").rglob("*.py"),
+             repo / "__spark_entry__.py", repo / "bench.py"]
+    callers = set()
+    for f in files:
+        tree = ast.parse(f.read_text(), filename=str(f))
+        scopes = [(tree, "<module>")]
+        while scopes:
+            node, scope = scopes.pop()
+            for child in ast.iter_child_nodes(node):
+                inner = scope
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    inner = child.name
+                if isinstance(child, ast.Call):
+                    fn = child.func
+                    name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                    if name == "rename_path":
+                        callers.add((f.relative_to(repo).as_posix(), inner))
+                scopes.append((child, inner))
+    assert callers == {
+        ("mercurygate_spark/io/writers.py", "publish"),
+        ("mercurygate_spark/io/writers.py", "published"),
+    }
