@@ -33,6 +33,14 @@ def read_table(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
 
 
+def _restore_stranded(spark: SparkSession, table_name: str) -> None:
+    """Move ``<table_name>__old`` back to the live name when a swap
+    crashed between its renames and left nothing under it."""
+    old = f"{table_name}__old"
+    if not spark.catalog.tableExists(table_name) and spark.catalog.tableExists(old):
+        spark.sql(f"ALTER TABLE {old} RENAME TO {table_name}")
+
+
 def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     """Swap a fully-written staging table into the live name —
     write-new-then-rename, the reference's snapshot-replace doctrine
@@ -42,11 +50,11 @@ def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     table; the swap itself is two catalog renames plus a drop, never a
     data copy, and it is the engine's only catalog-table swap (the
     path-based twin is io.writers.publish). The live table's data is
-    never deleted before the replacement holds the live name, but a
-    crash between the renames leaves only ``__old`` — unlike
-    ``publish`` there is no recovery on entry yet (at 100 TB this runs
-    under the ingest job's retry/lock, or on Delta/Iceberg where the
-    swap is one transaction).
+    never deleted before the replacement holds the live name. A crash
+    between the renames leaves the live table only under ``__old``;
+    like ``io.writers.published``, the next call moves it back to the
+    live name before dropping any stale ``__old`` (``_restore_stranded``),
+    so a replay swaps the staging table in and loses no rows.
 
     Reader safety is BOUNDED, not absolute (ADVICE r10): readers
     planned before the swap keep working only until the final DROP of
@@ -57,6 +65,7 @@ def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     production deployment needs a transactional catalog
     (Delta/Iceberg) or a deferred garbage-collect of __old instead of
     the inline DROP."""
+    _restore_stranded(spark, table_name)
     old = f"{table_name}__old"
     spark.sql(f"DROP TABLE IF EXISTS {old}")
     spark.sql(f"ALTER TABLE {table_name} RENAME TO {old}")
@@ -88,7 +97,9 @@ def compact_bucketed(
     which is why the conf pin is the mechanism, not a hint.
 
     The rewrite is written under a staging name and swapped in with
-    ``swap_bucketed`` (see its crash and reader-safety caveats).
+    ``swap_bucketed`` (see its crash and reader-safety notes); a replay
+    after a crash between the swap's renames first restores the live
+    table, so it re-reads and rewrites the same rows.
 
     Returns the compacted file count (== n_buckets). Plan contract
     (pinned in tests/test_plans.py): a probe join against the
@@ -98,6 +109,7 @@ def compact_bucketed(
     conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(conf_key, None)
     staging = f"{table_name}__compact"
+    _restore_stranded(spark, table_name)
     try:
         spark.conf.set(conf_key, "false")
         df = spark.table(table_name)

@@ -2,7 +2,9 @@
 
 Reference behavior: read bronze across all dateParts, rename ~140
 columns, flag active='Y', overwrite Delta (mm_bronze_silver.py:
-204-275). This engine adds what the reference only declares:
+204-275). Here silver reads only the datePart a refresh just wrote
+(pipeline.run.refresh_table) and adds what the reference only
+declares:
 
 - consistent typing of ALL timestamp columns on EVERY path
   (fixes §2d-4 — the reference types one column, first load only);
@@ -43,13 +45,6 @@ def conform(df: DataFrame, spec: TableSpec) -> DataFrame:
     out = rename_conform(df, spec.rename, keep_unmapped=True)
     out = type_timestamps(out, spec.ts_columns)
     return add_soft_delete_flag(out)
-
-
-def publish_snapshot(df: DataFrame, spec: TableSpec, path: str) -> str:
-    """Reference-parity publish: dedupe to latest per pk, then replace
-    the table (the reference's snapshot-replace, K2)."""
-    latest = dedupe_latest(df, spec.primary_key, spec.order_by, tiebreakers=None)
-    return publish(latest, path)
 
 
 def _merge_frame(

@@ -1755,19 +1755,6 @@ def _llm_corpus_oracle() -> str:
     """
 
 
-# probe hook (scale attribution): when a dict, the capstone records
-# wall seconds up to each curation checkpoint boundary — the stage
-# cost map behind the factor-10 cause notes
-_LLM_E2E_STAGE_TRACE: dict | None = None
-
-
-def _llm_trace(name: str, t0: float) -> None:
-    if _LLM_E2E_STAGE_TRACE is not None:
-        import time
-
-        _LLM_E2E_STAGE_TRACE[name] = round(time.monotonic() - t0, 2)
-
-
 @query("pipeline_llm_corpus_e2e", oracle=_llm_corpus_oracle())
 def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LLM-corpus curation chain end to end, hashed per stage:
@@ -1851,10 +1838,6 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token_mass",
         )
 
-    import time as _time
-
-    _t0 = _time.monotonic()
-
     # stages 1+2 overlap (guide §2.6: actions are only sequential
     # because the driver calls them sequentially): classifier TRAINING
     # (qc_trained_scorer — {QC_ITERS} sequential GD passes over the
@@ -1877,7 +1860,6 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     except BaseException:
         _train_job.wait_quietly()  # don't leave orphaned training jobs
         raise
-    _llm_trace("t_funnel", _t0)
 
     # stage 2: classifier keep over exactly those survivors. The
     # scoring featurization runs over d⋉s3 (funnel survivors), not the
@@ -1915,7 +1897,6 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node") != F.col("component")
     ).select(F.col("node").alias("doc_id"))
     snd = kept.join(nd_drop, "doc_id", "anti").localCheckpoint(eager=True)
-    _llm_trace("t_neardup", _t0)
 
     # stage 4: SemDeDup over the survivors' BRIDGED embeddings
     # (vec_id == doc_id — both id spaces are the same deterministic
@@ -1941,7 +1922,6 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("doc_id")
     )
     ssd = snd.join(sd_drop, "doc_id", "anti").localCheckpoint(eager=True)
-    _llm_trace("t_semdedup", _t0)
 
     # stage 5: SEMANTIC decontamination — surviving docs whose bridged
     # training vector sits within SEM_DECON_TAU of the capped eval set
@@ -1958,7 +1938,6 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("doc_id")
     )
     ssem = ssd.join(scont, "doc_id", "anti").localCheckpoint(eager=True)
-    _llm_trace("t_semscreen", _t0)
 
     # stage 6: gram decontamination — eval docs leave the training
     # set, gram-contaminated survivors drop (short no-gram docs keep:
@@ -1977,12 +1956,10 @@ def pipeline_llm_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(contam, "doc_id", "anti")
         .localCheckpoint(eager=True)
     )
-    _llm_trace("t_gramdecon", _t0)
 
     # stage 7: BPE trained on the curated survivors, then pack
     merged, _ = _bpe_train_loop(spark, sf_dir, docs_src=d.join(sdec, "doc_id"))
     ptoks = post_bpe_token_counts(merged).localCheckpoint(eager=True)
-    _llm_trace("t_bpe", _t0)
     packed = pack_token_stream(ptoks)
     stage5 = packed.select(
         md5_long(

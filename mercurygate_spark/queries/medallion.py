@@ -6,7 +6,9 @@ mm_bronze_silver.py:204-271) composed into ONE driver-hashable key:
 CSV extract → bronze ingest (audit columns, year_month partition,
 zero-row guard) → silver conform (rename/typing/active flag) →
 incremental merge-upsert with SCD soft delete across TWO extract
-generations → gold monthly KPIs. Each stage is individually
+generations → gold monthly KPIs. Each run is one
+``pipeline.run.refresh_table`` call — the same bronze → silver step the
+catalog loop ``pipeline.run.refresh`` uses. Each stage is individually
 pytest-pinned (tests/test_pipeline.py, test_gold_claims.py); this key
 puts the whole chain under the driver's value-hash gate.
 
@@ -139,12 +141,13 @@ def pipeline_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     run 1 (first load): extract CSV → bronze ``datePart=Historic``
     (ingest_table: header+infer read, audit columns, year_month
     hive partition) → silver first publish (conform + dedupe-latest);
-    run 2 (refresh): second extract → bronze ``datePart=<today>`` →
-    silver merge-upsert (refresh rows win on the audit updated_on,
-    claims missing from the refresh flip to active='N') — reading
-    ONLY the new datePart partition off bronze (partition pruning, the
-    incremental read a 100 TB refresh depends on); gold: monthly
-    claim KPIs + active-claim count per intake month.
+    run 2 (refresh): second extract → bronze ``datePart=2026-02-01``
+    → silver merge-upsert (refresh rows win on the audit updated_on,
+    claims missing from the refresh flip to active='N'). Both runs are
+    ``refresh_table`` calls, which read ONLY the datePart just written
+    (the incremental read a 100 TB refresh depends on: no listing of
+    older dateParts); gold: monthly claim KPIs + active-claim count
+    per intake month.
 
     Scale posture: every stage is the already-proven operator (bronze
     single-scan ingest, one-projection conform, single-shuffle
@@ -155,8 +158,7 @@ def pipeline_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mercurygate_spark.catalog import TABLES
     from mercurygate_spark.functions import month_bucket
-    from mercurygate_spark.pipeline.bronze import ingest_table
-    from mercurygate_spark.pipeline.silver import conform, merge_upsert_scd
+    from mercurygate_spark.pipeline.run import refresh_table
     from mercurygate_spark.queries.gold_claims import monthly_claim_kpis
 
     t = load_tables(spark, sf_dir, "orders")
@@ -165,8 +167,7 @@ def pipeline_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tf.mkdtemp(prefix="mg_medallion_")
     try:
         spec = TABLES["claim"]
-        bronze_base = f"{root}/bronze"
-        silver_path = f"{root}/silver/claim"
+        bronze_base, silver_base = f"{root}/bronze", f"{root}/silver"
 
         # run 2's refresh EXTRACT is independent of the whole run-1
         # chain (distinct output dir, derived only from the source
@@ -186,12 +187,10 @@ def pipeline_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             csv1 = f"{root}/extract1"
             snap1.write.mode("overwrite").option("header", True).csv(csv1)
-            ingest_table(
-                spark, csv1, spec, bronze_base, "mm", "medallion_e2e", RUN1_TS,
-                mode="initial",
+            refresh_table(
+                spark, csv1, spec, bronze_base, silver_base, "mm",
+                "medallion_e2e", RUN1_TS, mode="initial",
             )
-            bronze1 = spark.read.parquet(f"{bronze_base}/claim")
-            merge_upsert_scd(spark, conform(bronze1, spec), spec, silver_path)
         except BaseException:
             # wait for the extract thread before the outer finally's
             # rmtree — deleting root under an in-flight Spark write
@@ -201,15 +200,10 @@ def pipeline_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # ---- run 2: refresh extract → datePart=2026-02-01 → merge
         _x2_job.result()
-        ingest_table(
-            spark, csv2, spec, bronze_base, "mm", "medallion_e2e", RUN2_TS,
-            mode="refresh", date_part="2026-02-01",
+        _, current = refresh_table(
+            spark, csv2, spec, bronze_base, silver_base, "mm",
+            "medallion_e2e", RUN2_TS, mode="refresh", date_part="2026-02-01",
         )
-        bronze2 = spark.read.parquet(f"{bronze_base}/claim")
-        incoming = conform(
-            bronze2.where(F.col("datePart") == "2026-02-01"), spec
-        )
-        current = merge_upsert_scd(spark, incoming, spec, silver_path)
 
         # ---- gold: monthly KPIs + SCD-pinning active count
         gold = monthly_claim_kpis(current)

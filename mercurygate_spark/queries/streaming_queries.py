@@ -1096,12 +1096,6 @@ QC_DRIFT_PCT = 15    # |keep% − 50%| > 15 points fires recalibration
 QC_RECAL_BAND = 200  # arrival shard = least(2, char_len // BAND)
 
 
-# probe hook (scripts/recal_stage_probe.py): when a dict, the recal
-# gate records per-stage wall seconds into it — the stage attribution
-# behind docs/scale_probe artifacts' cause notes (VERDICT r14 #5)
-_RECAL_STAGE_TRACE: dict | None = None
-
-
 def drift_fires(kept: int, n: int) -> bool:
     """The exact integer drift rule shared by the Spark drain and the
     oracle CTEs: |100·kept − 50·n| > QC_DRIFT_PCT·n (no float keep-rate
@@ -1206,7 +1200,6 @@ def stream_classifier_gate_recal(spark: SparkSession, sf_dir: str) -> DataFrame:
         qc_trained_scorer,
     )
 
-    t_start = time.monotonic()
     d_full = load_tables(spark, sf_dir, "documents")["documents"]
     d = d_full.select("doc_id", "text")
     # offline: train + calibrate on the training population
@@ -1215,7 +1208,6 @@ def stream_classifier_gate_recal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", score_col()
     ).localCheckpoint(eager=True)
     thr0 = qc_score_threshold(scored_all)
-    t_offline = time.monotonic()
 
     base = os.path.join(
         tempfile.gettempdir(),
@@ -1243,7 +1235,6 @@ def stream_classifier_gate_recal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the threshold through unchanged for it (n=0 → fire false)
         shutil.rmtree(shard_dir, ignore_errors=True)
 
-    t_staging = time.monotonic()
     schema = spark.read.parquet(src_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -1304,14 +1295,6 @@ def stream_classifier_gate_recal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # correctness-critical drain invariant: bare assert would be
         # stripped under python -O and silently return partial results
         raise RuntimeError(f"arrival shards never drained: {schedule}")
-    t_drain = time.monotonic()
     out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
     shutil.rmtree(base, ignore_errors=True)
-    if _RECAL_STAGE_TRACE is not None:
-        _RECAL_STAGE_TRACE.update(
-            offline_train_calibrate_s=round(t_offline - t_start, 2),
-            stage_shards_s=round(t_staging - t_offline, 2),
-            stream_drain_s=round(t_drain - t_staging, 2),
-            read_back_s=round(time.monotonic() - t_drain, 2),
-        )
     return out

@@ -526,3 +526,56 @@ def test_only_publish_renames_tables():
         ("mercurygate_spark/io/writers.py", "publish"),
         ("mercurygate_spark/io/writers.py", "published"),
     }
+
+
+def test_bucketed_swap_recovers_after_a_crash_between_renames(spark, monkeypatch):
+    """io.bucketing: a crash on the second ``ALTER … RENAME`` of a swap
+    leaves the live table only under ``<name>__old``. A replay of the
+    swap, or of the compaction that ends in it, moves that table back
+    first instead of dropping it, and every row survives."""
+    import os
+
+    from mercurygate_spark.io.bucketing import compact_bucketed, swap_bucketed, write_bucketed
+
+    name = f"mg_swap_crash_{os.getpid()}"
+    staging = f"{name}__new"
+    real_sql = spark.sql
+
+    def crash_on_second_rename(m):
+        seen = [0]
+
+        def sql(query, *args, **kwargs):
+            if query.startswith("ALTER TABLE") and " RENAME TO " in query:
+                seen[0] += 1
+                if seen[0] == 2:
+                    raise _Crash(query)
+            return real_sql(query, *args, **kwargs)
+
+        m.setattr(spark, "sql", sql)
+
+    def rows(table):
+        return sorted(tuple(r) for r in spark.table(table).collect())
+
+    new_rows = [(i, f"new{i}") for i in range(8)]
+    try:
+        write_bucketed(spark.createDataFrame([(i, f"old{i}") for i in range(6)], "k long, v string"),
+                       name, "k", 4)
+        write_bucketed(spark.createDataFrame(new_rows, "k long, v string"), staging, "k", 4)
+        with monkeypatch.context() as m, pytest.raises(_Crash):
+            crash_on_second_rename(m)
+            swap_bucketed(spark, name, staging)
+        assert not spark.catalog.tableExists(name)
+        assert spark.catalog.tableExists(f"{name}__old")
+        swap_bucketed(spark, name, staging)
+        assert rows(name) == new_rows
+        assert not spark.catalog.tableExists(f"{name}__old")
+
+        with monkeypatch.context() as m, pytest.raises(_Crash):
+            crash_on_second_rename(m)
+            compact_bucketed(spark, name, "k", 4)
+        assert not spark.catalog.tableExists(name)
+        assert 0 < compact_bucketed(spark, name, "k", 4) <= 4
+        assert rows(name) == new_rows
+    finally:
+        for table in (name, staging, f"{name}__old", f"{name}__compact"):
+            real_sql(f"DROP TABLE IF EXISTS {table}")

@@ -14,7 +14,7 @@ from mercurygate_spark.catalog import TABLES, assert_no_conflicting_renames, der
 from mercurygate_spark.io.sftp import LocalFetcher
 from mercurygate_spark.pipeline.bronze import ZeroRowError, ingest_table
 from mercurygate_spark.pipeline.ledger import RunLedger
-from mercurygate_spark.pipeline.run import run_bronze, run_silver
+from mercurygate_spark.pipeline.run import refresh
 from mercurygate_spark.pipeline.silver import conform, merge_upsert_scd
 
 RUN_TS = datetime(2026, 1, 15, 8, 30, 0)
@@ -66,27 +66,26 @@ def test_bronze_to_silver_end_to_end(spark, staged, tmp_path):
     ledger = RunLedger()
     fetcher = LocalFetcher(staged)
 
-    results = run_bronze(
-        spark, fetcher, str(tmp_path / "staging"), bronze, "mm",
+    tables = refresh(
+        spark, fetcher, str(tmp_path / "staging"), bronze, silver, "mm",
         "pytest", RUN_TS, mode="initial", ledger=ledger,
     )
     # only the 3 staged files ingest; missing extracts are skipped (S4)
-    assert sorted(r.table for r in results) == ["claim", "claim_diary", "claim_payment"]
-    assert all(r.count > 0 for r in results)
+    assert sorted(tables) == ["claim", "claim_diary", "claim_payment"]
+    assert all(res.table == name and res.count > 0 for name, (res, _) in tables.items())
 
     # bronze layout: datePart=Historic / year_month=... hive dirs
     claim_dir = os.path.join(bronze, "claim", "datePart=Historic")
     assert os.path.isdir(claim_dir)
     assert any(d.startswith("year_month=") for d in os.listdir(claim_dir))
 
-    tables = run_silver(spark, bronze, silver, "mm", mode="snapshot", ledger=ledger)
-    claim = tables["claim"]
+    claim = tables["claim"][1]
     cols = set(claim.columns)
     # conformed names + audit + flag
     assert {"claim_number", "claim_type", "status_code", "transmittal_amount",
             "delivery_date", "date_created", "active", "updated_on", "year_month"} <= cols
     assert "claimnumber" not in cols
-    # typed dates on the snapshot path (reference only typed deliverydate,
+    # typed dates on the first-load path (reference only typed deliverydate,
     # first load only — engine types ALL declared ts cols, every path)
     dtypes = dict(claim.dtypes)
     assert dtypes["delivery_date"] == "timestamp"
@@ -96,17 +95,21 @@ def test_bronze_to_silver_end_to_end(spark, staged, tmp_path):
     assert rows["CLM-003"]["delivery_date"] is None  # malformed → NULL, not error
     assert rows["CLM-001"]["active"] == "Y"
     # claim_diary quirk: raw datecreated survives unmapped
-    diary = tables["claim_diary"]
+    diary = tables["claim_diary"][1]
     assert "datecreated" in diary.columns and "date_of" in diary.columns
     # child-table pk is (claim_number, row_id): a claim with 3 payments
     # publishes ALL 3 to silver — deduping children on claim_number
     # alone would keep one arbitrary payment and corrupt payment KPIs
-    payments = tables["claim_payment"]
+    payments = tables["claim_payment"][1]
     clm1 = payments.filter(payments.claim_number == "CLM-001").collect()
     assert len(clm1) == 3
     assert sorted(r["payment_amount"] for r in clm1) == [125.0, 250.0, 500.0]
-    # ledger timings are real (reference's linehaul timer bug fixed)
+    # ledger timings are real (reference's linehaul timer bug fixed);
+    # each entry counts its table's bronze rows
     assert all(e["execution_time"] >= 0 for e in ledger.entries)
+    assert {e["table"]: e["count"] for e in ledger.entries} == {
+        name: res.count for name, (res, _) in tables.items()
+    }
     assert ledger.to_df(spark).columns == ["table", "database", "count", "execution_time"]
 
 
@@ -188,21 +191,84 @@ def test_bronze_writes_one_file_per_month_in_parallel(spark, tmp_path):
     assert tracker.getStageInfo(write_stage).numCompletedTasks > 1
 
 
-def test_run_silver_on_file_uri(spark, staged, tmp_path):
-    """run_silver probes bronze through io.fs, so a scheme-qualified
-    base (file://, and by the same API s3a://, abfss://) is found; an
-    os.path probe is False on every URI and silently skipped all
-    tables."""
-    bronze = str(tmp_path / "bronze")
-    run_bronze(
-        spark, LocalFetcher(staged), str(tmp_path / "staging"), bronze, "mm",
+def test_refresh_on_file_uri(spark, staged, tmp_path):
+    """refresh works on scheme-qualified bases (file://, and by the same
+    API s3a://, abfss://): bronze is written and read back, and silver
+    routed and published, through Hadoop paths — an os.path probe is
+    False on every URI and would silently skip all tables."""
+    tables = refresh(
+        spark, LocalFetcher(staged), str(tmp_path / "staging"),
+        f"file://{tmp_path}/bronze", f"file://{tmp_path}/silver", "mm",
         "pytest", RUN_TS, mode="initial",
     )
-    silver_uri = f"file://{tmp_path}/silver"
-    tables = run_silver(spark, f"file://{bronze}", silver_uri, "mm", mode="merge")
     assert sorted(tables) == ["claim", "claim_diary", "claim_payment"]
-    assert tables["claim"].count() == 3
+    assert tables["claim"][1].count() == 3
+    assert os.path.isdir(tmp_path / "bronze" / "claim" / "datePart=Historic")
     assert os.path.isdir(tmp_path / "silver" / "claim")
+
+
+CLAIM_CSV_DAY2 = """claimid,claimnumber,claimtype,statuscode,claimant,transmittalamount,totalamount,deliverydate,datecreated,dateclosed
+1,CLM-001,DAMAGE,CLOSED,Acme Corp,1200.50,1500.00,2025-11-02 10:00:00,2025-11-01 09:00:00,2026-01-20 10:00:00
+3,CLM-003,DAMAGE,OPEN,Gamma Inc,,300.00,2025-12-06 11:00:00,2025-12-05 11:00:00,
+"""
+
+RUN2_TS = datetime(2026, 1, 21, 8, 30, 0)
+
+
+def _two_claim_refreshes(spark, tmp_path):
+    """refresh a 3-claim extract whose ``dateclosed`` is all empty
+    (inferred string), then a 2-claim extract that has close dates
+    (inferred timestamp) and no CLM-002. Returns the second run."""
+    src = tmp_path / "src"
+    src.mkdir()
+    args = (str(tmp_path / "staging"), str(tmp_path / "bronze"), str(tmp_path / "silver"),
+            "mm", "pytest")
+    day1 = "\n".join(
+        line if i == 0 else line.rsplit(",", 1)[0] + ","
+        for i, line in enumerate(CLAIM_CSV.strip().splitlines())
+    )
+    (src / "claim.txt").write_text(day1 + "\n")
+    refresh(spark, LocalFetcher(str(src)), *args, RUN_TS, mode="initial")
+    (src / "claim.txt").write_text(CLAIM_CSV_DAY2)
+    return refresh(spark, LocalFetcher(str(src)), *args, RUN2_TS, mode="refresh")
+
+
+def test_refresh_soft_deletes_a_vanished_claim(spark, tmp_path):
+    """The second refresh merges only its own extract: CLM-002, absent
+    from it, flips to active='N' although datePart=Historic still holds
+    it, and the extracts' differing ``dateclosed`` types never meet in
+    one bronze read. Silver keeps ``datePart`` a string."""
+    res, claim = _two_claim_refreshes(spark, tmp_path)["claim"]
+    assert res.count == 2 and res.path.endswith("datePart=2026-01-21")
+    rows = {r["claim_number"]: r for r in claim.collect()}
+    assert {k: r["active"] for k, r in rows.items()} == {
+        "CLM-001": "Y", "CLM-002": "N", "CLM-003": "Y",
+    }
+    assert rows["CLM-001"]["status_code"] == "CLOSED"
+    assert rows["CLM-001"]["date_closed"] == datetime(2026, 1, 20, 10, 0, 0)
+    assert rows["CLM-002"]["datePart"] == "Historic"
+    assert rows["CLM-001"]["datePart"] == "2026-01-21"
+    dtypes = dict(claim.dtypes)
+    assert dtypes["datePart"] == "string"
+    assert dtypes["date_closed"] == "timestamp"
+
+
+def test_refresh_reads_only_its_own_datepart(spark, tmp_path, monkeypatch):
+    """The silver step's bronze input is the datePart the refresh just
+    wrote — no file of an earlier datePart is listed or read."""
+    from mercurygate_spark.pipeline import run
+
+    inputs = []
+
+    def spy(df, spec):
+        inputs.append(df.inputFiles())
+        return conform(df, spec)
+
+    monkeypatch.setattr(run, "conform", spy)
+    _two_claim_refreshes(spark, tmp_path)
+    first, second = inputs
+    assert first and all("/datePart=Historic/" in f for f in first)
+    assert second and all("/datePart=2026-01-21/" in f for f in second)
 
 
 def test_merge_upsert_scd(spark, tmp_path):
